@@ -11,11 +11,11 @@ here:
 
 Inputs are tile tables (path or DataFrame) — the scale-native landing
 format (see sources/tiles.py) — or, reference-style, GeoTIFF paths
-(a ``.tif`` path or a list of them): those convert through
-sources/geotiff.py when rasterio is available, else through the
+(a ``.tif`` path or a list of them): those convert through the
 dependency-free mini reader (sources/minitiff.py — classic TIFF or
 BigTIFF, striped or tiled, LZW/deflate/uncompressed, predictor 1/2/3,
-single- or multi-band).
+single- or multi-band), each file's header parsed once for
+validation, band names, dtypes and the tile grid.
 Tiling replaces ``max_block_size``: the tile table is
 already blocked, and Spark partitioning replaces the reference's
 parallelpipe workers.
@@ -30,6 +30,14 @@ from raster2points_spark.operators.grid import (
     raster2points,
     validate_band_alignment,
 )
+from raster2points_spark.sources.minitiff import (
+    _DTYPE_NAMES,
+    MiniTiff,
+    _band_names,
+    minitiff_to_tiles,
+    resolve_headers,
+    tiles_from_headers,
+)
 from raster2points_spark.sources.tiles import read_tiles
 
 
@@ -39,109 +47,27 @@ def tiles_from_rasters(
     tile_size: int | None = None,
     overview_level: int = 0,
 ) -> DataFrame:
-    """GeoTIFF paths → tile table, band ids b1..bN positionally across
-    files and samples (the reference's multi-raster convention, extended
-    so one multi-band file contributes one band per sample).  Prefers
-    the full rasterio adapter; falls back to the pure-Python mini reader
+    """GeoTIFF paths → tile table through the pure-Python mini reader
     (classic/BigTIFF, striped or tiled, LZW/deflate/uncompressed,
     PackBits, predictors 1/2/3, sub-byte 1/2/4-bit samples, COG
-    overview IFDs) when rasterio is
-    absent.
+    overview IFDs), band ids b1..bN positionally across files and
+    samples (the reference's multi-raster convention, extended so one
+    multi-band file contributes one band per sample).
     ``tile_size=None`` aligns the grid with a tiled file's native tile
     layout (COG access pattern); striped files default to 512.
     ``overview_level=k`` reads the k-th COG overview pyramid level
     instead of full resolution — 1/4^k of the bytes for
-    downsample-shaped queries (mini-reader path; the rasterio adapter
-    takes full-res only and raises otherwise)."""
-    if overview_level:
-        from raster2points_spark.sources.minitiff import minitiff_to_tiles
-
-        return minitiff_to_tiles(
-            spark, paths, tile_size=tile_size, overview_level=overview_level
-        )
-    try:
-        from raster2points_spark.sources.geotiff import geotiff_to_tiles
-
-        return geotiff_to_tiles(spark, paths, tile_size=tile_size or 512)
-    except ImportError:
-        from raster2points_spark.sources.minitiff import minitiff_to_tiles
-
-        return minitiff_to_tiles(spark, paths, tile_size=tile_size)
-
-
-_PREFLIGHT_DIST_THRESHOLD = 256  # path count above which headers parse executor-side
-
-
-def _preflight_headers_distributed(spark: SparkSession, paths: list[str]):
-    """Executor-side twin of the driver header loop: mapInPandas over
-    the path list (the minitiff_catalog shape), returning lightweight
-    records with exactly the fields the pre-flight validation reads.
-    One output row per file — the same driver-sized listing Spark's
-    own file index collects."""
-    from types import SimpleNamespace
-
-    import pandas as pd
-
-    from raster2points_spark.sources.minitiff import read_header
-
-    def parse(batches):
-        for pdf in batches:
-            rows = []
-            for i, p in zip(pdf["idx"], pdf["path"]):
-                h = read_header(p)
-                rows.append(
-                    {
-                        "idx": int(i),
-                        "width": h.width,
-                        "height": h.height,
-                        "transform": list(h.transform),
-                        "dtype": h.dtype,
-                        "spp": h.samples_per_pixel,
-                        "crs": h.crs,
-                        "path": p,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "idx", "width", "height", "transform", "dtype", "spp",
-                    "crs", "path",
-                ],
-            )
-
-    from raster2points_spark.io import local_df
-
-    files = local_df(spark, list(enumerate(paths)), "idx int, path string")
-    n_parts = max(1, min(len(paths) // 1000 + 1, 256))
-    rows = (
-        files.repartition(n_parts)
-        .mapInPandas(
-            parse,
-            "idx int, width int, height int, transform array<double>, "
-            "dtype string, spp int, crs string, path string",
-        )
-        .collect()
+    downsample-shaped queries."""
+    return minitiff_to_tiles(
+        spark, paths, tile_size=tile_size, overview_level=overview_level
     )
-    return [
-        SimpleNamespace(
-            path=r.path,
-            width=r.width,
-            height=r.height,
-            transform=list(r.transform),
-            dtype=r.dtype,
-            samples_per_pixel=r.spp,
-            crs=r.crs,
-        )
-        for r in sorted(rows, key=lambda r: r.idx)  # restore path order
-    ]
 
 
 def _paths_preflight(
     paths: list[str],
     validate: bool = True,
     spark: SparkSession | None = None,
-    dist_threshold: int = _PREFLIGHT_DIST_THRESHOLD,
-) -> dict[str, str] | None:
+) -> tuple[list[MiniTiff], dict[str, str]]:
     """Pre-flight for GeoTIFF PATH inputs: the file headers already
     hold everything validate_band_alignment and band_dtypes would
     learn from three Spark jobs, and with an opaque mapInPandas tile
@@ -149,33 +75,14 @@ def _paths_preflight(
     full Python decode (measured: the eager pre-flight tripled
     scan_geotiff_* wall-clock).
 
-    Threshold dispatch (VERDICT r12 #4): small lists parse on the
-    driver (sub-ms local reads, zero Spark jobs — the CLI case); above
-    ``dist_threshold`` the header parses run EXECUTOR-side via
-    mapInPandas (``_preflight_headers_distributed``) so a 100k-file
-    mosaic doesn't serialize 100k reads on the driver.  Both paths
-    feed the SAME validation and dtype-map code below.
-
-    Returns the positional band_id → numpy-dtype-name map, or None
-    when the mini reader cannot parse a header (an exotic layout the
-    rasterio adapter might still handle) — the caller then falls back
-    to the Spark-side metadata checks.  Validation failures raise,
-    matching validate_band_alignment's contract: unequal resolutions
-    or non-co-tiling grids (different dims/transform) refuse before
-    any pixel is read."""
-    from raster2points_spark.sources.minitiff import (
-        _DTYPE_NAMES,
-        _band_names,
-        read_header,
-    )
-
-    try:
-        if spark is not None and len(paths) > dist_threshold:
-            hdrs = _preflight_headers_distributed(spark, paths)
-        else:
-            hdrs = [read_header(p) for p in paths]
-    except Exception:
-        return None
+    Returns the full-resolution headers — parsed once, through
+    :func:`map_headers`' driver/executor dispatch, and reused for the
+    tile grid — and the positional band_id → numpy-dtype-name map.  A
+    header the mini reader cannot parse raises its ValueError.
+    Validation failures raise, matching validate_band_alignment's
+    contract: unequal resolutions or non-co-tiling grids (different
+    dims/transform) refuse before any pixel is read."""
+    hdrs = resolve_headers(spark, paths)
     if validate:  # validate=False still wants the dtype map, not the raises
         # mixed CRS refuses like mixed resolution: pixel (row, col)
         # grids in different reference systems never co-tile, and a
@@ -209,17 +116,7 @@ def _paths_preflight(
     for hdr, file_bands in zip(hdrs, _band_names(hdrs, None)):
         for b in file_bands:
             out[b] = _DTYPE_NAMES[hdr.dtype.lstrip("<>")]
-    return out
-
-
-def _as_tiles(spark: SparkSession, tiles, overview_level: int = 0) -> DataFrame:
-    if isinstance(tiles, (list, tuple)):
-        return tiles_from_rasters(spark, list(tiles), overview_level=overview_level)
-    if isinstance(tiles, str) and tiles.lower().endswith((".tif", ".tiff")):
-        return tiles_from_rasters(spark, [tiles], overview_level=overview_level)
-    if overview_level:
-        raise ValueError("overview_level is only valid for GeoTIFF path inputs")
-    return read_tiles(spark, tiles) if isinstance(tiles, str) else tiles
+    return hdrs, out
 
 
 def raster2df(
@@ -265,20 +162,26 @@ def raster2df(
         paths = list(tiles)
     elif isinstance(tiles, str) and tiles.lower().endswith((".tif", ".tiff")):
         paths = [tiles]
-    if paths is not None and dtypes is None:
+    if paths is not None:
         # raises on misaligned rasters ONLY when validate=True; with
         # validate=False the headers still supply the dtype map
-        pre = _paths_preflight(paths, validate=validate, spark=spark)
-        if pre is not None:
-            unknown = [b for b in bands if b not in pre]
-            if unknown:
-                raise ValueError(
-                    f"unknown band(s) {unknown} — these files provide "
-                    f"{sorted(pre)}"
-                )
+        hdrs, pre = _paths_preflight(paths, validate=validate, spark=spark)
+        unknown = [b for b in bands if b not in pre]
+        if unknown:
+            raise ValueError(
+                f"unknown band(s) {unknown} — these files provide "
+                f"{sorted(pre)}"
+            )
+        if dtypes is None:
             dtypes = {b: pre[b] for b in bands}
-            validate = False  # already validated driver-side
-    tdf = _as_tiles(spark, tiles, overview_level=overview_level)
+        validate = False  # already validated driver-side
+        if overview_level:
+            hdrs = resolve_headers(spark, paths, overview_level=overview_level)
+        tdf = tiles_from_headers(spark, hdrs)
+    elif overview_level:
+        raise ValueError("overview_level is only valid for GeoTIFF path inputs")
+    else:
+        tdf = read_tiles(spark, tiles) if isinstance(tiles, str) else tiles
     if validate:
         validate_band_alignment(tdf, bands)
     if max_block_size:

@@ -4,11 +4,10 @@ reference (reconstructed): ``raster2csv in1.tif [in2.tif ...] out.csv
 [--col_names ...] [--separator {,|;|t}] [--calc_area]``.
 
 here: tile-table parquet in — or, reference-style, GeoTIFF paths
-(rasterio when available, else the pure-Python mini reader: classic
-TIFF or BigTIFF, striped or tiled/COG incl. overview IFDs,
-none/LZW/deflate/PackBits compression, predictor 1/2/3, sub-byte
-(1/2/4-bit) samples, single- or multi-band chunky/planar) — CSV/
-Parquet directory out:
+(the pure-Python mini reader: classic TIFF or BigTIFF, striped or
+tiled/COG incl. overview IFDs, none/LZW/deflate/PackBits compression,
+predictor 1/2/3, sub-byte (1/2/4-bit) samples, single- or multi-band
+chunky/planar) — CSV/Parquet directory out:
 
     python -m raster2points_spark.cli TILES_PARQUET OUT_DIR \
         --bands b1 b2 [--col-names elev slope] [--separator ';'] \
@@ -150,14 +149,25 @@ def main(argv: list[str] | None = None) -> int:
 
     # eager band validation: a typo'd band silently yields an empty
     # point table otherwise (the library API stays lazy; the CLI is
-    # the user-facing surface, so it checks).  Tiny column scan.
+    # the user-facing surface, so it checks).  GeoTIFF inputs answer
+    # from their headers (zero Spark jobs — a query over the opaque
+    # decode source would decode every tile); tile tables from a tiny
+    # column scan.
     from pyspark.sql import functions as F
 
-    from raster2points_spark.api import _as_tiles
+    if tif_mode:
+        from raster2points_spark.sources.minitiff import _band_names, resolve_headers
 
-    present = {
-        r[0] for r in _as_tiles(spark, tiles).select(F.col("band_id")).distinct().collect()
-    }
+        hdrs = resolve_headers(spark, tiles)
+        band_hdrs = {
+            b: h for h, names in zip(hdrs, _band_names(hdrs, None)) for b in names
+        }
+        present = set(band_hdrs)
+    else:
+        from raster2points_spark.sources.tiles import read_tiles
+
+        tiles_df = read_tiles(spark, tiles)
+        present = {r[0] for r in tiles_df.select(F.col("band_id")).distinct().collect()}
     if bands is None:
         # GeoTIFF default: every band the inputs yield, positionally
         # across files AND samples (b2 < b10 — numeric-aware sort)
@@ -186,35 +196,45 @@ def main(argv: list[str] | None = None) -> int:
         from raster2points_spark.operators.grid import grid_unpivot
         from raster2points_spark.sinks.geotiff import write_geotiffs
 
-        tiles_df = _as_tiles(spark, tiles).filter(F.col("band_id").isin(bands))
+        if tif_mode:
+            from raster2points_spark.sources.minitiff import tiles_from_headers
+
+            tiles_df = tiles_from_headers(spark, hdrs)
+            grid = [
+                (b, band_hdrs[b].width, band_hdrs[b].height, band_hdrs[b].transform)
+                for b in bands
+            ]
+        else:
+            meta = tiles_df.filter(F.col("band_id").isin(bands)).groupBy("band_id").agg(
+                F.max(F.col("col_off") + F.col("width")).alias("w"),
+                F.max(
+                    F.col("row_off") + (F.size("data") / F.col("width")).cast("int")
+                ).alias("h"),
+                F.first("transform").alias("t"),
+                F.countDistinct("transform").alias("nt"),
+            ).collect()
+            # F.first('transform') assumes all of a band's tiles share
+            # one transform; generic tile-table parquet can violate
+            # that, and an arbitrary tile's origin would silently win —
+            # refuse, like the co-tiling check in operators/grid.py
+            torn = [r.band_id for r in meta if r.nt != 1]
+            if torn:
+                ap.error(
+                    f"band(s) {torn} carry more than one transform across "
+                    "their tiles — each output band needs a single grid; "
+                    "split or re-grid the tile table first"
+                )
+            grid = [(r.band_id, r.w, r.h, r.t) for r in meta]
+        tiles_df = tiles_df.filter(F.col("band_id").isin(bands))
         names = dict(zip(bands, args.col_names)) if args.col_names else {}
-        meta = tiles_df.groupBy("band_id").agg(
-            F.max(F.col("col_off") + F.col("width")).alias("w"),
-            F.max(
-                F.col("row_off") + (F.size("data") / F.col("width")).cast("int")
-            ).alias("h"),
-            F.first("transform").alias("t"),
-            F.countDistinct("transform").alias("nt"),
-        ).collect()
-        # F.first('transform') assumes all of a band's tiles share one
-        # transform; generic tile-table parquet can violate that, and
-        # an arbitrary tile's origin would silently win — refuse, like
-        # the co-tiling check in operators/grid.py
-        torn = [r.band_id for r in meta if r.nt != 1]
-        if torn:
-            ap.error(
-                f"band(s) {torn} carry more than one transform across "
-                "their tiles — each output band needs a single grid; "
-                "split or re-grid the tile table first"
-            )
-        width = max(r.w for r in meta)
-        height = max(r.h for r in meta)
-        a, e = meta[0].t[0], meta[0].t[4]
+        width = max(w for _, w, _, _ in grid)
+        height = max(h for _, _, h, _ in grid)
+        a, e = grid[0][3][0], grid[0][3][4]
         # all output files share ONE pixel scale; mixed-resolution
         # inputs would silently get band 1's grid — refuse, like the
         # raster2df pre-flight (COG-ify each resolution group alone,
         # or resample first: raster_mosaic_hetero shows the pattern)
-        mixed = [r.band_id for r in meta if (r.t[0], r.t[4]) != (a, e)]
+        mixed = [b for b, _, _, t in grid if (t[0], t[4]) != (a, e)]
         if mixed:
             ap.error(
                 f"mixed pixel scales across bands ({mixed} differ from "
@@ -229,14 +249,8 @@ def main(argv: list[str] | None = None) -> int:
         origins = local_df(
             spark,
             [
-                (
-                    names.get(r.band_id, r.band_id),
-                    float(r.t[2]),
-                    float(r.t[5]),
-                    int(r.w),
-                    int(r.h),
-                )
-                for r in meta
+                (names.get(b, b), float(t[2]), float(t[5]), int(w), int(h))
+                for b, w, h, t in grid
             ],
             "file_id string, lon0 double, lat0 double, width int, height int",
         )

@@ -203,16 +203,6 @@ def affine_coords(pixels: DataFrame) -> DataFrame:
     )
 
 
-def band_zip(base: DataFrame, other: DataFrame, value_name: str) -> DataFrame:
-    """Positional multi-band alignment: left-join a second exploded
-    band on (tile_id, pos).  NoData in bands 2..N yields NULL but the
-    row is kept (reference contract).  At scale both sides share the
-    tile_id partitioning, so a bucketed layout makes this shuffle-free.
-    """
-    rhs = other.select("tile_id", "pos", F.col("value").alias(value_name))
-    return base.join(rhs, ["tile_id", "pos"], "left")
-
-
 def geodesic_area(lat: Column, transform: Column) -> Column:
     """Geodesic pixel area in m² — pure function of latitude (the
     reference computes one area per row of pixels; same formula here,
@@ -263,8 +253,7 @@ def raster2points(
     The per-pixel stream is never shuffled: mask, affine, area and the
     sink all pipeline inside the same stage.  (The reference requires
     equal resolution across rasters, so co-tiling is a precondition,
-    exactly as there; for bands tiled differently use
-    :func:`raster2points_joined`.)
+    exactly as there.)
 
     ``dtypes`` maps band_id → source numpy dtype name; matching value
     columns are cast from the float64 container type back to the
@@ -297,7 +286,7 @@ def raster2points(
     # rows, silently dropping every band-1 pixel of that tile.  Coalesce
     # each missing payload to an all-NULL array of the mask band's
     # length so the contract holds: NoData/absence in bands 2..N keeps
-    # the row with NULL (same semantics as raster2points_joined).
+    # the row with NULL.
     zip_cols = [F.col("d0")] + [
         F.coalesce(
             F.col(f"d{i}"), F.expr("array_repeat(cast(null AS double), size(d0))")
@@ -336,37 +325,3 @@ def raster2points(
         px = px.withColumn("area", geodesic_area(F.col("lat"), F.col("transform")))
         out_cols.append("area")
     return px.select(*out_cols, *extra_cols)
-
-
-def raster2points_joined(
-    tiles: DataFrame,
-    bands: list[str],
-    col_names: list[str] | None = None,
-    calc_area: bool = False,
-    dtypes: dict[str, str] | None = None,
-) -> DataFrame:
-    """Join-based variant for bands that are NOT co-tiled: each band is
-    exploded independently and aligned on (tile_id, pos).  Costs one
-    shuffle per extra band unless the layout is bucketed by tile_id."""
-    if not bands:
-        raise ValueError("need at least one band")
-    names = col_names or [f"val{i+1}" for i in range(len(bands))]
-    if len(names) != len(bands):
-        raise ValueError("col_names must match bands")
-
-    per_band = {b: grid_unpivot(tiles.filter(F.col("band_id") == b)) for b in bands}
-    base = nodata_filter(per_band[bands[0]])
-    base = affine_coords(base).withColumnRenamed("value", names[0])
-    for b, name in zip(bands[1:], names[1:]):
-        base = band_zip(base, per_band[b], name)
-    if dtypes:
-        for b, name in zip(bands, names):
-            if b in dtypes:
-                base = base.withColumn(
-                    name, F.col(name).cast(NUMPY_TO_SPARK_DTYPE[dtypes[b]])
-                )
-    out_cols = ["lon", "lat", *names]
-    if calc_area:
-        base = base.withColumn("area", geodesic_area(F.col("lat"), F.col("transform")))
-        out_cols.append("area")
-    return base.select(*out_cols)

@@ -2337,33 +2337,19 @@ def raster_extent_prune(spark, sf_dir):
     )
 
 
-_LEVEL_PICK_DIST_THRESHOLD = 256  # survivor count above which level picks run executor-side
-
-
-def _pick_levels(spark, path_factors, dist_threshold=_LEVEL_PICK_DIST_THRESHOLD):
-    """Per-file overview-level picks for a survivor list, threshold-
-    dispatched (VERDICT r13 #4, mirroring api._paths_preflight): at or
-    below ``dist_threshold`` survivors the picks run as a driver loop
-    (sub-ms local header reads, zero Spark jobs); above it they run
-    executor-side via pick_overviews_distributed so a 100k-survivor
-    mosaic parallelizes its header I/O.  Both paths share
-    _pick_overview_header, so level choices are identical by
-    construction (pinned by test_overview_prune_dispatch_parity).
-    Returns {path: level} keyed by the FULL input path (ADVICE r14:
-    basename keying silently collided same-named files in different
-    directories); callers that want basenames take them themselves."""
-    from raster2points_spark.sources.minitiff import (
-        pick_overview,
-        pick_overviews_distributed,
-    )
+def _pick_levels(spark, path_factors):
+    """Per-file overview-level picks for a survivor list, through
+    map_headers' one driver-vs-executor rule (small survivor lists
+    pick in a driver loop with zero Spark jobs; large ones parallelize
+    their header I/O executor-side).  Returns {path: level} keyed by
+    the FULL input path (ADVICE r14: basename keying silently collided
+    same-named files in different directories); callers that want
+    basenames take them themselves."""
+    from raster2points_spark.sources.minitiff import map_headers, pick_overview
 
     pairs = list(path_factors)
-    if len(pairs) > dist_threshold:
-        return {
-            r.path: r.level
-            for r in pick_overviews_distributed(spark, pairs).collect()
-        }
-    return {p: pick_overview(p, f) for p, f in pairs}
+    levels = map_headers(spark, lambda pf: pick_overview(*pf), pairs)
+    return {p: lvl for (p, _), lvl in zip(pairs, levels)}
 
 
 @register(
@@ -2395,9 +2381,10 @@ def raster_overview_prune(spark, sf_dir):
     golden VALUES answer derivable from the committed fixtures by hand.
 
     Scale shape: catalog prune ∝ headers; level pick ∝ surviving
-    headers (pooled reads); pixel I/O ∝ surviving tiles at the CHOSEN
-    level ∩ bbox — the two-level prune of raster_extent_prune with the
-    pyramid as a third, multiplicative lever."""
+    headers (executor-side above map_headers' threshold); pixel I/O ∝
+    surviving tiles at the CHOSEN level ∩ bbox — the two-level prune
+    of raster_extent_prune with the pyramid as a third, multiplicative
+    lever."""
     import os as _os
 
     from raster2points_spark.sources.minitiff import (
@@ -2423,8 +2410,7 @@ def raster_overview_prune(spark, sf_dir):
         .collect()
     )
     # (b) cheapest sufficient level per survivor (header-only I/O) —
-    # threshold-dispatched like api._paths_preflight: small survivor
-    # lists pick on the driver, large ones executor-side
+    # small survivor lists pick on the driver, large ones executor-side
     levels = {
         _os.path.basename(p): lvl
         for p, lvl in _pick_levels(

@@ -68,8 +68,8 @@ def _lzw_encode(data: bytes) -> bytes:
     round-trip is hypothesis-swept in tests/test_sink_geotiff.py.
     Pure Python on tile-sized blocks (the task's own payload), same
     trade as the reader's decoder: correctness-first for the most
-    common GeoTIFF codec, with the rasterio seam as the accelerated
-    path on clusters that have one."""
+    common GeoTIFF codec.  The bit accumulator is masked to its unflushed
+    bits after every code, so each code costs O(1), not O(bytes so far)."""
     CLEAR, EOI = 256, 257
 
     def init():
@@ -115,6 +115,7 @@ def _lzw_encode(data: bytes) -> bytes:
         while bitlen >= 8:
             out.append((acc >> (bitlen - 8)) & 0xFF)
             bitlen -= 8
+        acc &= (1 << bitlen) - 1
     if bitlen:
         out.append((acc << (8 - bitlen)) & 0xFF)
     return bytes(out)

@@ -1,10 +1,7 @@
-"""Pure-Python reader for small (Geo)TIFFs — no native dependencies.
+"""Pure-Python reader for (Geo)TIFFs — no native dependencies.
 
-The real GeoTIFF front door (sources/geotiff.py) needs rasterio, which
-this environment cannot install — so the window-grid math there ran
-only against synthetic metadata.  This module closes that gap: a
-dependency-free parser for the subset of TIFF 6.0 real GeoTIFFs/COGs
-actually use:
+The package's one GeoTIFF ingest path: a dependency-free parser for
+the subset of TIFF 6.0 real GeoTIFFs/COGs actually use:
 
   * classic TIFF AND BigTIFF (magic 43, 8-byte offsets — what >4 GB
     rasters, i.e. everything at the 100 TB design point, ship as)
@@ -19,13 +16,15 @@ actually use:
   * the GeoTIFF tags that drive the tile-table transform
     (ModelPixelScale 33550, ModelTiepoint 33922, GDAL_NODATA 42113)
 
-``minitiff_to_tiles`` mirrors geotiff_to_tiles' distributed shape
-exactly — driver header pass for the window grid, executors read only
-their own windows' byte ranges via mapInPandas — so the job shape is
-exercised end-to-end against a REAL file layout, not a stub.  For a
-tiled TIFF the engine's tile grid aligns 1:1 with the file's tile grid
-by default, so each task decompresses exactly its own blocks (the COG
-access pattern).
+Ingest is two steps: :func:`resolve_headers` parses each file's header
+once (:func:`map_headers` — on the driver for short path lists,
+executor-side above ``HEADER_DIST_THRESHOLD``), and
+:func:`tiles_from_headers` turns those headers into the window-grid
+rows that executors decode via mapInPandas, each task reading only
+its own windows' byte ranges.  For a tiled TIFF the engine's tile
+grid aligns 1:1 with the file's tile grid by default, so each task
+decompresses exactly its own blocks (the COG access pattern).
+``minitiff_to_tiles`` is the two steps composed.
 
 Also supported since r11:
 
@@ -46,8 +45,6 @@ Also supported since r11:
 Still out of scope (raise ValueError with the offending tag):
 JPEG/zstd/webp compression (need native libs this box lacks — probed
 each round, see reports/zstd_probe_r11.txt) and 64-bit-int samples.
-Full-fidelity ingestion of those remains geotiff_to_tiles on a
-rasterio-equipped cluster.
 """
 
 from __future__ import annotations
@@ -61,7 +58,11 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from raster2points_spark.sources.geotiff import TILE_SCHEMA_DDL, window_grid
+TILE_SCHEMA_DDL = (
+    "band_id string, tile_id long, col_off int, row_off int, width int, "
+    "height int, transform array<double>, nodata double, dtype string, "
+    "data array<double>"
+)
 
 # TIFF tag ids
 _NEW_SUBFILE_TYPE = 254
@@ -111,8 +112,7 @@ def _lzw_decode(data: bytes) -> bytes:
     correctness-first decode of the most common GeoTIFF compression
     beats rejecting the file; measured ~3 MB/s (≈40 ms per 256x256
     int16 COG block) — fine for tile-sized blocks, and tasks decode
-    their blocks in parallel; swap in an accelerated codec via the
-    rasterio path when the cluster has one."""
+    their blocks in parallel."""
     CLEAR, EOI = 256, 257
     base = [bytes([i]) for i in range(256)] + [b"", b""]
     table = list(base)
@@ -385,9 +385,9 @@ def read_header(path: str, overview: int = 0, mask: bool = False) -> MiniTiff:
         # plan the tile grid.  The mapping outlives the file handle;
         # every slice taken during parse is a bytes copy, so nothing
         # escapes — close the mapping deterministically on exit
-        # rather than relying on refcount GC (32 pooled header threads
-        # would otherwise accumulate live mappings on non-CPython or
-        # when a traceback pins the frame).  Immutable-file
+        # rather than relying on refcount GC (a pass over hundreds of
+        # headers would otherwise accumulate live mappings on
+        # non-CPython or when a traceback pins the frame).  Immutable-file
         # assumption: truncating a file under an active mapping is
         # SIGBUS by OS contract; the fallback read() path is used
         # where mapping fails.
@@ -657,7 +657,7 @@ def _decode_block(hdr: MiniTiff, f, bx: int, by: int, sample: int):
     """Decode one strip/tile and return the 2D array of ONE sample's
     values for that block's VALID region (edge tiles clipped).  One
     seek + one read of exactly the block's byte range — the same I/O
-    unit rasterio/GDAL block reads use."""
+    unit GDAL block reads use."""
     import numpy as np
 
     per_plane = hdr.blocks_down * hdr.blocks_across
@@ -748,7 +748,7 @@ def read_window(
 ):
     """Read one window of one band as a float list (row-major), touching
     only the strips/tiles that cover it — the same I/O discipline
-    rasterio block reads have, so the mapInPandas task shape is honest
+    GDAL block reads have, so the mapInPandas task shape is honest
     about bytes read."""
     import numpy as np
 
@@ -782,7 +782,7 @@ def read_window(
                 out[r0 - row_off : r1 - row_off, c0 - col_off : c1 - col_off] = block[
                     r0 - by * bh : r1 - by * bh, c0 - bx * bw : c1 - bx * bw
                 ]
-    return [float(v) for v in out.ravel()]
+    return out.ravel().tolist()
 
 
 def _band_names(hdrs: list[MiniTiff], band_ids: list | None) -> list[list[str]]:
@@ -824,71 +824,159 @@ def _band_names(hdrs: list[MiniTiff], band_ids: list | None) -> list[list[str]]:
     return out
 
 
-def minitiff_to_tiles(
-    spark: SparkSession,
+def window_grid(
+    raster_width: int,
+    raster_height: int,
+    tile_size: int,
+    tile_height: int | None = None,
+) -> list[dict]:
+    """The reference's block-window generator: row-major tile grid
+    covering the raster, edge tiles clipped.  tile_id is the row-major
+    index — the same numbering the grid fixtures use.  ``tile_height``
+    (default: square = tile_size) lets a tiled TIFF's native
+    TileWidth×TileLength grid map 1:1 onto the tile table, so each task
+    decompresses exactly its own file blocks."""
+    tile_h = tile_height if tile_height is not None else tile_size
+    if raster_width <= 0 or raster_height <= 0:
+        raise ValueError("raster dimensions must be positive")
+    if tile_size <= 0 or tile_h <= 0:
+        raise ValueError("tile_size must be positive")
+    tiles_per_row = (raster_width + tile_size - 1) // tile_size
+    out = []
+    for row_off in range(0, raster_height, tile_h):
+        for col_off in range(0, raster_width, tile_size):
+            out.append(
+                {
+                    "tile_id": (row_off // tile_h) * tiles_per_row
+                    + (col_off // tile_size),
+                    "col_off": col_off,
+                    "row_off": row_off,
+                    "width": min(tile_size, raster_width - col_off),
+                    "height": min(tile_h, raster_height - row_off),
+                }
+            )
+    return out
+
+
+HEADER_DIST_THRESHOLD = 256  # item count above which header parses run executor-side
+
+
+def map_headers(spark: SparkSession | None, fn, items) -> list:
+    """``[fn(x) for x in items]`` for header-sized work — ``fn`` parses
+    one file's header and returns a metadata-sized record — in item
+    order.  The one dispatch rule for every header pass: at or below
+    ``HEADER_DIST_THRESHOLD`` items (or without a session) the calls
+    run in a driver loop (sub-ms local reads, zero Spark jobs — the
+    CLI case); above it they run executor-side as one mapInPandas over
+    the item list, so a 100k-file mosaic does not serialize 100k header
+    reads on the driver.  In both modes the first failing item, in
+    item order, raises its own exception on the driver: a header the
+    reader cannot parse is the same typed ``ValueError`` either way."""
+    items = list(items)
+    if spark is None or len(items) <= HEADER_DIST_THRESHOLD:
+        return [fn(x) for x in items]
+    import pickle
+
+    import pandas as pd
+
+    from raster2points_spark.io import local_df
+
+    def apply(batches):
+        for pdf in batches:
+            recs = []
+            for x in pdf["item"]:
+                try:
+                    recs.append(pickle.dumps((True, fn(pickle.loads(x)))))
+                except Exception as e:  # re-raised on the driver
+                    recs.append(pickle.dumps((False, e)))
+            yield pd.DataFrame({"idx": pdf["idx"].to_numpy(), "rec": recs})
+
+    files = local_df(
+        spark, [(i, pickle.dumps(x)) for i, x in enumerate(items)], "idx int, item binary"
+    )
+    # ~1k header parses per task: enough per task to amortize
+    # scheduling, enough tasks to spread thousands of files
+    n_parts = max(1, min(len(items) // 1000 + 1, 256))
+    rows = files.repartition(n_parts).mapInPandas(apply, "idx int, rec binary").collect()
+    out = []
+    for r in sorted(rows, key=lambda r: r.idx):
+        ok, rec = pickle.loads(r.rec)
+        if not ok:
+            raise rec
+        out.append(rec)
+    return out
+
+
+def _pick_overview_header(path: str, factor: float, mask: bool = False) -> MiniTiff:
+    """Level selection AND the selected level's header in one pass:
+    parse full-res once, scan the pyramid for the coarsest level whose
+    decimation ≤ ``factor``, and return THAT level's header — reusing
+    the already-parsed header instead of a second read (the serial
+    pick-then-reparse shape doubled header I/O, ADVICE r12)."""
+    full = read_header(path, overview=0)
+    best_k, best_dec, best_h = 0, 1.0, full
+    for k in range(1, full.n_overviews + 1):
+        h = read_header(path, overview=k)
+        dec = full.width / h.width
+        if dec <= factor + 1e-9 and dec > best_dec:
+            best_k, best_dec, best_h = k, dec, h
+    if mask:  # mask SubIFD hangs off the chosen level; needs its own parse
+        return read_header(path, overview=best_k, mask=True)
+    return best_h
+
+
+def pick_overview(path: str, factor: float) -> int:
+    """Select the COG overview level for a requested decimation
+    factor: the COARSEST IFD whose decimation (full_width /
+    level_width) does not exceed ``factor`` — GDAL's overview
+    selection rule, so a factor-4 query reads the 1/16-bytes level
+    when the pyramid has one and degrades toward full resolution when
+    it doesn't.  factor < 2 (or no overviews) → 0 (full res)."""
+    return _pick_overview_header(path, factor).overview
+
+
+def resolve_headers(
+    spark: SparkSession | None,
     paths: list[str],
-    band_ids: list | None = None,
-    tile_size: int | None = None,
     overview_level: int = 0,
     internal_mask: bool = False,
     decimation: float | None = None,
-) -> DataFrame:
-    """Distributed mini-TIFF → tile-table conversion; identical contract
-    and job shape to geotiff_to_tiles (driver header pass → window-grid
-    rows → executors read their own windows via mapInPandas), but with
-    zero native dependencies.
-
-    ``tile_size=None`` (default) aligns the engine grid with a tiled
-    file's native TileWidth×TileLength so each task decompresses exactly
-    its own file blocks (the COG access pattern); striped files default
-    to 512.  Multi-band files expand to one tile-table band per sample.
-
-    ``overview_level=k`` reads the k-th COG overview IFD instead of the
-    full-resolution image — for downsample-shaped queries this touches
-    1/4^k of the bytes, the cheap decade lever at 100 TB.  The overview
-    grid carries its own (coarser) transform, so downstream affine
-    coords stay correct with no special-casing.
-
-    ``internal_mask=True`` reads each file's internal FILETYPE_MASK
-    SubIFD (GDAL's .msk-in-file convention) as the band instead of the
-    image — the mask arrives as a uint8 0/1 tile band with nodata=0,
-    so unioning it with the image band and running the standard
-    mask-first chain drops masked pixels exactly like a separate mask
-    raster would.
-
-    ``decimation=f`` selects each file's overview PER FILE via
-    :func:`pick_overview` (the coarsest level whose decimation ≤ f —
-    GDAL's rule), so a mixed mosaic where some files carry pyramids
-    and some don't still reads the cheapest valid level of each;
-    mutually exclusive with an explicit ``overview_level``.
-    """
+) -> list[MiniTiff]:
+    """Each path's header at the IFD its tiles will be read from,
+    parsed once through :func:`map_headers`, in path order.
+    ``overview_level=k`` selects the k-th overview IFD;
+    ``decimation=f`` selects PER FILE via :func:`pick_overview` (level
+    selection and the chosen level's parse in one call);
+    ``internal_mask=True`` takes that IFD's FILETYPE_MASK SubIFD."""
     if decimation is not None and overview_level:
         raise ValueError("pass overview_level OR decimation, not both")
 
-    def _resolve(p: str) -> MiniTiff:
-        # level selection + final header parse in ONE worker call:
-        # the old shape ran pick_overview serially on the driver and
-        # then re-parsed the same headers in the pool — doubling
-        # header I/O and serializing storage latency at
-        # thousands-of-COGs scale (ADVICE r12)
+    def resolve(p: str) -> MiniTiff:
         if decimation is not None:
             return _pick_overview_header(p, decimation, mask=internal_mask)
         return read_header(p, overview=overview_level, mask=internal_mask)
 
-    meta = []
-    if len(paths) > 1:
-        # headers are a few KB of I/O each; at thousands of COGs a
-        # sequential pass serializes storage latency on the driver —
-        # pool the reads like Spark's own parallel parquet-footer
-        # listing (order preserved by ex.map)
-        from concurrent.futures import ThreadPoolExecutor
+    return map_headers(spark, resolve, paths)
 
-        with ThreadPoolExecutor(min(32, len(paths))) as ex:
-            hdrs = list(ex.map(_resolve, paths))
-    else:
-        hdrs = [_resolve(paths[0])]
-    names = _band_names(hdrs, band_ids)
-    for hdr, file_bands in zip(hdrs, names):
+
+def tiles_from_headers(
+    spark: SparkSession,
+    hdrs: list[MiniTiff],
+    band_ids: list | None = None,
+    tile_size: int | None = None,
+) -> DataFrame:
+    """Tile table over already-parsed headers: the driver lays out each
+    file's window grid from its header (no further I/O) and executors
+    read only their own windows' byte ranges via mapInPandas.
+
+    ``tile_size=None`` (default) aligns the engine grid with a tiled
+    file's native TileWidth×TileLength so each task decompresses exactly
+    its own file blocks (the COG access pattern); striped files default
+    to 512.  Multi-band files expand to one tile-table band per sample,
+    named b1..bN across files and samples unless ``band_ids`` says
+    otherwise (:func:`_band_names`)."""
+    meta = []
+    for hdr, file_bands in zip(hdrs, _band_names(hdrs, band_ids)):
         if tile_size is None:
             tw, th = (hdr.block_width, hdr.block_height) if hdr.tiled else (512, 512)
         else:
@@ -945,69 +1033,47 @@ def minitiff_to_tiles(
     )
 
 
+def minitiff_to_tiles(
+    spark: SparkSession,
+    paths: list[str],
+    band_ids: list | None = None,
+    tile_size: int | None = None,
+    overview_level: int = 0,
+    internal_mask: bool = False,
+    decimation: float | None = None,
+) -> DataFrame:
+    """GeoTIFF paths → tile table: :func:`resolve_headers` then
+    :func:`tiles_from_headers` (see both for ``band_ids``/``tile_size``).
+
+    ``overview_level=k`` reads the k-th COG overview IFD instead of the
+    full-resolution image — for downsample-shaped queries this touches
+    1/4^k of the bytes, the cheap decade lever at 100 TB.  The overview
+    grid carries its own (coarser) transform, so downstream affine
+    coords stay correct with no special-casing.
+
+    ``internal_mask=True`` reads each file's internal FILETYPE_MASK
+    SubIFD (GDAL's .msk-in-file convention) as the band instead of the
+    image — the mask arrives as a uint8 0/1 tile band with nodata=0,
+    so unioning it with the image band and running the standard
+    mask-first chain drops masked pixels exactly like a separate mask
+    raster would.
+
+    ``decimation=f`` selects each file's overview PER FILE via
+    :func:`pick_overview` (the coarsest level whose decimation ≤ f —
+    GDAL's rule), so a mixed mosaic where some files carry pyramids
+    and some don't still reads the cheapest valid level of each;
+    mutually exclusive with an explicit ``overview_level``.
+    """
+    hdrs = resolve_headers(spark, paths, overview_level, internal_mask, decimation)
+    return tiles_from_headers(spark, hdrs, band_ids, tile_size)
+
+
 CATALOG_SCHEMA_DDL = (
     "file string, width int, height int, n_bands int, dtype string, "
     "compression int, tiled boolean, bits int, n_overviews int, "
     "has_mask boolean, crs string, nodata double, x0 double, y0 double, "
     "x1 double, y1 double"
 )
-
-
-def _pick_overview_header(path: str, factor: float, mask: bool = False) -> MiniTiff:
-    """Level selection AND the selected level's header in one pass:
-    parse full-res once, scan the pyramid for the coarsest level whose
-    decimation ≤ ``factor``, and return THAT level's header — reusing
-    the already-parsed header instead of a second read (the serial
-    pick-then-reparse shape doubled header I/O, ADVICE r12)."""
-    full = read_header(path, overview=0)
-    best_k, best_dec, best_h = 0, 1.0, full
-    for k in range(1, full.n_overviews + 1):
-        h = read_header(path, overview=k)
-        dec = full.width / h.width
-        if dec <= factor + 1e-9 and dec > best_dec:
-            best_k, best_dec, best_h = k, dec, h
-    if mask:  # mask SubIFD hangs off the chosen level; needs its own parse
-        return read_header(path, overview=best_k, mask=True)
-    return best_h
-
-
-def pick_overview(path: str, factor: float) -> int:
-    """Select the COG overview level for a requested decimation
-    factor: the COARSEST IFD whose decimation (full_width /
-    level_width) does not exceed ``factor`` — GDAL's overview
-    selection rule, so a factor-4 query reads the 1/16-bytes level
-    when the pyramid has one and degrades toward full resolution when
-    it doesn't.  factor < 2 (or no overviews) → 0 (full res)."""
-    return _pick_overview_header(path, factor).overview
-
-
-def pick_overviews_distributed(spark: SparkSession, path_factors) -> DataFrame:
-    """Executor-side twin of :func:`pick_overview` for large mosaics:
-    ``path_factors`` is a list of (path, decimation_factor) pairs; the
-    per-file pyramid scan (header-only I/O, a few KB per file) runs as
-    mapInPandas over the pair list — the `_preflight_headers_distributed`
-    shape — so a 100k-survivor catalog doesn't serialize 100k header
-    reads in a driver loop (VERDICT r13 #4).  Returns (path, level);
-    the result is metadata-sized (one row per file), the same
-    driver-sized listing Spark's own file index collects.  Level
-    choices are IDENTICAL to the driver-side pick_overview — both
-    paths share `_pick_overview_header`."""
-    import pandas as pd
-
-    def parse(batches):
-        for pdf in batches:
-            rows = [
-                {"path": p, "level": _pick_overview_header(p, float(f)).overview}
-                for p, f in zip(pdf["path"], pdf["factor"])
-            ]
-            yield pd.DataFrame(rows, columns=["path", "level"])
-
-    from raster2points_spark.io import local_df
-
-    pairs = list(path_factors)
-    files = local_df(spark, pairs, "path string, factor double")
-    n_parts = max(1, min(len(pairs) // 1000 + 1, 256))
-    return files.repartition(n_parts).mapInPandas(parse, "path string, level int")
 
 
 def minitiff_catalog(spark: SparkSession, paths: list[str]) -> DataFrame:

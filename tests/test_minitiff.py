@@ -525,7 +525,7 @@ def test_big_endian_int16_header():
 
 def test_minitiff_to_tiles_golden(spark, tiny_tif):
     """End-to-end: real file layout -> distributed tile table with the
-    same schema/partitioning as the rasterio path."""
+    tile-table schema the parquet landing format uses."""
     from raster2points_spark.sources.minitiff import minitiff_to_tiles
 
     path, vals, w, h = tiny_tif
@@ -1481,9 +1481,9 @@ def test_subbyte_predictor_and_fillorder_rejected(tmp_path):
 
 
 def test_pooled_header_pass_preserves_order(tmp_path):
-    """minitiff_to_tiles' driver header pass reads files through a
-    thread pool; the tile-table's band naming depends on input order,
-    so pooled reads must land in path order regardless of completion
+    """read_header is safe to call from a thread pool (no shared parse
+    state): the tile-table's band naming depends on input order, so
+    pooled reads must land in path order regardless of completion
     order."""
     from concurrent.futures import ThreadPoolExecutor
 
@@ -1698,7 +1698,9 @@ def test_paths_preflight_validates_driver_side(tmp_path):
     b = str(tmp_path / "b.tif")
     _write_tiff(a, [1.0] * 8, 4, 2)
     _write_tiff(b, [2.0] * 8, 4, 2)
-    assert _paths_preflight([a, b]) == {"b1": "float64", "b2": "float64"}
+    hdrs, dtypes = _paths_preflight([a, b])
+    assert dtypes == {"b1": "float64", "b2": "float64"}
+    assert [h.path for h in hdrs] == [a, b]
 
     coarse = str(tmp_path / "coarse.tif")
     _write_tiff(coarse, [1.0] * 8, 4, 2, pixel_scale=(1.0, 1.0))
@@ -1710,46 +1712,76 @@ def test_paths_preflight_validates_driver_side(tmp_path):
     with pytest.raises(ValueError, match="do not co-tile"):
         _paths_preflight([a, shifted])
 
-    # unparseable header -> None (caller falls back to Spark-side)
+    # unparseable header -> the reader's typed ValueError, up front
     junk = str(tmp_path / "junk.tif")
     open(junk, "wb").write(b"not a tiff at all")
-    assert _paths_preflight([a, junk]) is None
+    with pytest.raises(ValueError, match="byte-order mark"):
+        _paths_preflight([a, junk])
 
     # validate=False: skip the raises but still supply the dtype map
     # (ADVICE r12 — the documented contract is that only validate=True
     # runs the eager pre-flight checks)
-    assert _paths_preflight([a, coarse], validate=False) == {
+    assert _paths_preflight([a, coarse], validate=False)[1] == {
         "b1": "float64",
         "b2": "float64",
     }
 
 
-def test_paths_preflight_threshold_dispatch(spark, tmp_path):
+def test_paths_preflight_threshold_dispatch(spark, tmp_path, monkeypatch):
     """Driver-serial and executor-side preflight produce IDENTICAL
-    validation outcomes and dtype maps (VERDICT r12 #4): dist_threshold=0
-    forces every call through the mapInPandas path."""
+    headers, validation outcomes and dtype maps (VERDICT r12 #4): a
+    header threshold of 0 forces every call through the mapInPandas
+    path."""
     from raster2points_spark.api import _paths_preflight
+    from raster2points_spark.sources import minitiff
 
     a = str(tmp_path / "a.tif")
     b2 = str(tmp_path / "b2.tif")  # two-band file: positional naming must hold
     _write_tiff(a, [1.0] * 8, 4, 2)
     _write_tiff(b2, None, 4, 2, bands=[[2.0] * 8, [3.0] * 8], tile=(4, 4))
-    want = _paths_preflight([a, b2])
-    assert want == {"b1": "float64", "b2": "float64", "b3": "float64"}
-    assert _paths_preflight([a, b2], spark=spark, dist_threshold=0) == want
-
     coarse = str(tmp_path / "coarse.tif")
     _write_tiff(coarse, [1.0] * 8, 4, 2, pixel_scale=(1.0, 1.0))
-    with pytest.raises(ValueError, match="unequal resolutions"):
-        _paths_preflight([a, coarse], spark=spark, dist_threshold=0)
-    assert _paths_preflight(
-        [a, coarse], validate=False, spark=spark, dist_threshold=0
-    ) == _paths_preflight([a, coarse], validate=False)
+    want = _paths_preflight([a, b2])
+    assert want[1] == {"b1": "float64", "b2": "float64", "b3": "float64"}
+    want_loose = _paths_preflight([a, coarse], validate=False)
 
-    # executor-side parse failure -> None, same as the driver path
+    monkeypatch.setattr(minitiff, "HEADER_DIST_THRESHOLD", 0)
+    assert _paths_preflight([a, b2], spark=spark) == want
+    with pytest.raises(ValueError, match="unequal resolutions"):
+        _paths_preflight([a, coarse], spark=spark)
+    assert _paths_preflight([a, coarse], validate=False, spark=spark) == want_loose
+
+    # executor-side parse failure -> the same typed ValueError the
+    # driver path raises
     junk = str(tmp_path / "junk.tif")
     open(junk, "wb").write(b"nope")
-    assert _paths_preflight([a, junk], spark=spark, dist_threshold=0) is None
+    with pytest.raises(ValueError, match="too short"):
+        _paths_preflight([a, junk], spark=spark)
+
+
+def test_raster2df_parses_each_header_once(spark, tmp_path, monkeypatch):
+    """raster2df over GeoTIFF paths parses each file's header once on
+    the driver: the preflight's parse feeds validation, band names,
+    dtypes AND the tile grid (the grid used to re-parse every header)."""
+    from raster2points_spark.api import raster2df
+    from raster2points_spark.sources import minitiff
+
+    a = str(tmp_path / "a.tif")
+    b = str(tmp_path / "b.tif")
+    _write_tiff(a, [1.0, 2.0, -9999.0, 4.0, 5.0, 6.0, 7.0, 8.0], 4, 2)
+    _write_tiff(b, [float(v) for v in range(10, 90, 10)], 4, 2)
+    calls = []
+    real = minitiff.read_header
+
+    def counting(path, *args, **kw):
+        calls.append(path)
+        return real(path, *args, **kw)
+
+    monkeypatch.setattr(minitiff, "read_header", counting)
+    df = raster2df(spark, [a, b], bands=["b1", "b2"])
+    monkeypatch.undo()
+    assert calls == [a, b]
+    assert df.count() == 7  # one pixel masked by band-1 nodata
 
 
 def test_raster2df_validate_false_and_unknown_band(spark, tmp_path):
@@ -1903,10 +1935,12 @@ def test_raster2df_refuses_mixed_crs(spark, tmp_path):
     assert df.count() > 0
 
 
-def test_distributed_preflight_carries_crs(spark, tmp_path):
+def test_distributed_preflight_carries_crs(spark, tmp_path, monkeypatch):
     """The executor-side header pass must surface the same crs field
     the driver loop does — mixed CRS refuses above the dispatch
     threshold too."""
+    from raster2points_spark.sources import minitiff
+
     vals = [float(v) for v in range(8)]
     paths = []
     for i in range(4):
@@ -1915,5 +1949,6 @@ def test_distributed_preflight_carries_crs(spark, tmp_path):
         paths.append(p)
     from raster2points_spark.api import _paths_preflight
 
+    monkeypatch.setattr(minitiff, "HEADER_DIST_THRESHOLD", 2)
     with pytest.raises(ValueError, match="different CRSs"):
-        _paths_preflight(paths, spark=spark, dist_threshold=2)
+        _paths_preflight(paths, spark=spark)

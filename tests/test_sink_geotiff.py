@@ -391,6 +391,25 @@ def test_lzw_incompressible_roundtrip_fuzz():
         assert _lzw_decode(_lzw_encode(data)) == data
 
 
+def test_lzw_encode_bytes_pinned():
+    """The encoder's exact output on a seeded noisy 64 KiB u1 block
+    (the round-trips above check decoding, not the bytes written) —
+    crossing several CLEAR resets, so an encoder change that still
+    round-trips but emits different codes fails here."""
+    import hashlib
+
+    import numpy as np
+
+    from raster2points_spark.sinks.geotiff import _lzw_encode
+
+    block = np.random.default_rng(7).integers(0, 32, 65536, dtype="u1").tobytes()
+    enc = _lzw_encode(block)
+    assert len(enc) == 52160
+    assert hashlib.sha256(enc).hexdigest() == (
+        "8db4130c2253e94b35993ad0fd98f9bdc1af64fb031f62bdbe5ef21c718130c8"
+    )
+
+
 def test_out_of_range_pixels_raise_clearly(spark, tmp_path):
     from pyspark.sql import functions as F
 
@@ -518,6 +537,37 @@ def test_cli_cogify_keeps_per_file_dims(spark, tmp_path):
     h2 = read_header(os.path.join(cog_dir, "b2.tif"))
     assert (h1.width, h1.height) == (4, 2)   # elev keeps 4x2
     assert (h2.width, h2.height) == (4, 4)   # sparse_mask keeps 4x4
+
+
+def test_cli_cogify_runs_no_job_before_the_write(spark, tmp_path, monkeypatch):
+    """--format geotiff on GeoTIFF inputs takes its band list and each
+    band's dims and transform from the headers: no Spark job runs
+    before write_geotiffs (a metadata query over the opaque decode
+    source decodes every tile)."""
+    from raster2points_spark.cli import main
+    from raster2points_spark.sinks import geotiff as sink
+
+    sc = spark.sparkContext
+    group = "cli-cogify-no-discovery"
+    before_write = []
+    real = sink.write_geotiffs
+
+    def spy(*args, **kw):
+        before_write.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        return real(*args, **kw)
+
+    monkeypatch.setattr(sink, "write_geotiffs", spy)
+    sc.setJobGroup(group, group)
+    try:
+        rc = main(["fixtures/tif/elev.tif", "fixtures/tif/slope.tif",
+                   str(tmp_path / "cogs"), "--format", "geotiff", "--tile-size", "16"])
+    finally:
+        sc.setJobGroup(None, None)
+    assert rc == 0
+    assert before_write == [0]
+    # the group does see the write's own jobs
+    assert sc.statusTracker().getJobIdsForGroup(group)
+    assert read_header(str(tmp_path / "cogs" / "b2.tif")).width == 4
 
 
 def test_cli_cogify_validates_predictor_dtype(capsys):
